@@ -920,8 +920,9 @@ def ensure_fixture() -> "object":
 
 
 def kernel_micro_bench(b, P: int, W: int, n_docs: int = 20000) -> dict:
-    """Single-core raw kernel throughput, fast vs native C, on the REAL
-    corpus (first n_docs docs collected once) — no Spark in the loop.
+    """Single-core raw kernel throughput, interpreted fallback vs compiled
+    C, on the REAL corpus (first n_docs docs collected once) — no Spark
+    in the loop.
     This is the per-core compute rate a 100-TB partition sees once
     per-sweep fixed costs are amortized; parity of the two z outputs is
     asserted as a side effect."""
@@ -1015,18 +1016,17 @@ def kernel_micro_bench(b, P: int, W: int, n_docs: int = 20000) -> dict:
 
 def gibbs_sweep_bench(spark, fx, replicate: int = 100,
                       n_partitions: int = 8) -> dict:
-    """Per-sweep wall time of the distributed sampler — native C vs fast
-    vs reference kernel — on the extraction corpus (min-of-3 sweeps
-    each), plus the single-core kernel micro-benchmark.
+    """Per-sweep wall time of the distributed sampler — one sweep per
+    job and fused 5 per job — on the extraction corpus (min-of-3 each),
+    plus the single-core kernel micro-benchmark.
 
     n_partitions=8 (not CPUS) so each partition carries ~500 k tokens —
     the 100-TB-realistic regime where per-partition kernel compute
-    dominates the fixed per-sweep Spark cost (one fused
-    mapInArrow-sweep + checkpoint + delta-refresh job, ~0.4 s at this
-    fixture).
-    End-to-end time still includes that fixed cost, so the e2e ratio
-    under-states the pure kernel speedup — kernel_micro reports the
-    single-core compute rate that dominates at real partition sizes."""
+    dominates the fixed per-sweep Spark cost (one mapInArrow sweep +
+    checkpoint + delta-refresh job, ~0.4 s at this fixture).
+    End-to-end time still includes that fixed cost — kernel_micro
+    reports the single-core compute rate of the compiled kernel vs the
+    interpreted fallback that dominates at real partition sizes."""
     import pyspark.sql.functions as F
 
     from entitysummarization_spark.models.gibbs import (
@@ -1046,47 +1046,26 @@ def gibbs_sweep_bench(spark, fx, replicate: int = 100,
     n_tokens = int(b.corpus.agg(F.sum("freq")).collect()[0][0])
     out = {"tokens": n_tokens, "n_preds": P, "n_words": W,
            "n_partitions": n_partitions}
-    for kern in ("native", "fast", "reference"):
+    # fused blocks (sweeps_per_job=5): K sweeps in ONE job amortize the
+    # fixed per-job term (launch + Arrow transfer + checkpoint) that
+    # dominates the one-per-job sweep at late chain. Per-sweep time =
+    # best block / K; exactness anchors in tests/test_gibbs_fused.py.
+    for K, tag in ((1, ""), (5, "_fused5")):
         cfg = GibbsConfig(n_preds=P, n_words=W, base_seed=11,
-                          n_partitions=n_partitions, kernel=kern)
+                          n_partitions=n_partitions, sweeps_per_job=K)
         g = DistributedGibbs(spark, b.corpus, b.obj_pred, b.lam, cfg)
         g.init_state()
         best = None
         for _ in range(3):
             t0 = time.perf_counter()
-            g.sweep()
-            dt = time.perf_counter() - t0
+            g.sweep(n_fused=K)
+            dt = (time.perf_counter() - t0) / K
             best = dt if best is None or dt < best else best
         g.close()
-        out[f"sweep_sec_{kern}"] = round(best, 3)
-        print(f"[gibbs] kernel={kern} sweep {best:.3f}s "
+        out[f"sweep_sec{tag}"] = round(best, 3)
+        out[f"tok_per_sec{tag}"] = round(n_tokens / best, 1)
+        print(f"[gibbs] sweeps_per_job={K} sweep {best:.3f}s "
               f"({n_tokens / best:.0f} tok/s)", file=sys.stderr)
-    out["tok_per_sec_fast"] = round(n_tokens / out["sweep_sec_fast"], 1)
-    out["tok_per_sec_native"] = round(n_tokens / out["sweep_sec_native"], 1)
-    out["e2e_speedup"] = round(
-        out["sweep_sec_reference"] / out["sweep_sec_native"], 2
-    )
-    # fused blocks (sweeps_per_job=5): K sweeps in ONE job amortize the
-    # fixed per-job term (launch + Arrow transfer + checkpoint) that
-    # dominates the unfused native sweep at late chain. Per-sweep time =
-    # best block / 5; exactness anchors in tests/test_gibbs_fused.py.
-    K = 5
-    cfg = GibbsConfig(n_preds=P, n_words=W, base_seed=11,
-                      n_partitions=n_partitions, kernel="native",
-                      sweeps_per_job=K)
-    g = DistributedGibbs(spark, b.corpus, b.obj_pred, b.lam, cfg)
-    g.init_state()
-    best = None
-    for _ in range(3):
-        t0 = time.perf_counter()
-        g.sweep(n_fused=K)
-        dt = (time.perf_counter() - t0) / K
-        best = dt if best is None or dt < best else best
-    g.close()
-    out["sweep_sec_native_fused5"] = round(best, 3)
-    out["tok_per_sec_native_fused5"] = round(n_tokens / best, 1)
-    print(f"[gibbs] kernel=native fused5 sweep {best:.3f}s "
-          f"({n_tokens / best:.0f} tok/s)", file=sys.stderr)
     out["kernel_micro"] = kernel_micro_bench(b, int(P), int(W))
     canon.unpersist()
     repos.unpersist()

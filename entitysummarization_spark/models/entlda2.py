@@ -660,22 +660,13 @@ class DistributedEntLda2(CheckpointedStateLifecycle):
                      "den": dcols[3], "dtn": dcols[4]}
                 )
 
-        old = self.state
         swept = (
-            old.select("doc_id", "words", "es", "zs", "cands")
+            self.state.select("doc_id", "words", "es", "zs", "cands")
             .sortWithinPartitions("doc_id")
             .mapInPandas(sweep_fn, SWEEP_SCHEMA)
         )
-        # lazy local checkpoint — materialized by the delta aggregation
-        # (one job per sweep; see gibbs.sweep for the full rationale)
-        self.state = self._local_checkpoint(
-            swept, reliable=cfg.reliable_checkpoint, eager=False,
-        )
-        self.sweeps_done += 1
-        self._apply_count_deltas()
-        self._finalize_lazy_checkpoint()
-        self._release_old_state(old)
-        self._retire_broadcast(bc)
+        # one job per sweep — see state_lifecycle._commit_sweep
+        self._commit_sweep(swept, bc)
 
     def run(self, n_sweeps: int) -> None:
         """n_sweeps iterations of the reference schedule (:116-134)."""

@@ -18,7 +18,7 @@ matrices. Distributed, that becomes the AD-LDA scheme (Newman et al. 2009,
 
 Scale: only P×W counts ever reach the driver (bounded by the F10
 vocabulary prune); token state is never collected. Per sweep: one
-mapInPandas pass (no shuffle — partitioning by doc_id is established once
+mapInArrow pass (no shuffle — partitioning by doc_id is established once
 and reused) + one aggregation to refresh global counts. Each sweep's
 state is localCheckpoint-ed (lineage truncation: O(1) plan size and the
 per-sweep count broadcast becomes destroyable — at 1000 sweeps an
@@ -26,19 +26,16 @@ undestroyed broadcast per sweep is an unbounded leak; the soak test in
 test_gibbs_kernels.py runs 100+ sweeps asserting both stay flat).
 Checkpoint/resume per north_rule: plans/checkpoint.py.
 
-Four doc-sweep kernels, bit-identical by construction (same seeded-RNG
-contract, same IEEE op order): _sweep_doc_reference is the per-token
-NumPy transcription the oracle parity tests arbitrate against;
-_sweep_doc_fast replaces the per-token tiny-array NumPy dispatches with
-cached-per-word scalar arithmetic for ~5× sweep throughput; "native"
-(the default where a C compiler exists — models/native_kernel.py) and
-"numba" (models/numba_kernel.py, jitted only where numba is installed)
-compile the same loop to machine code, called once per Arrow batch.
-GibbsConfig.kernel selects; unavailable kernels degrade explicitly
-(native→fast, numba→interpreted twin), and because every kernel is
-bit-identical a heterogeneous-cluster mix of fallbacks still produces
-the same chain. tests/test_gibbs_kernels.py arbitrates all of them
-against the reference kernel on z-chain AND count-matrix equality.
+One sweep path: mapInArrow into the block runner shared with M6
+(models/sweep_runner.py), ``sweeps_per_job`` sweeps per job. Each
+executor runs the compiled C kernel (models/native_kernel.py) where
+``native_kernel.load_native()`` loads, otherwise the interpreted
+``_sweep_doc_fast`` — nothing to configure. Both are bit-identical to
+``oracle.GibbsOracle`` by construction (same seeded-RNG contract, same
+IEEE op order), so a cluster mixing them still produces one chain;
+tests/test_gibbs_kernels.py holds the distributed chain to the oracle
+at 1 and 3 partitions, and test_gibbs_fused.py holds the fallback to
+the compiled kernel.
 
 Broadcast discipline: sweep-CONSTANT inputs (candidate CSR, λ·β, Σλβ)
 ship once per sampler in ``_const_bc``; the per-sweep broadcast carries
@@ -59,9 +56,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import native_kernel, numba_kernel
+from . import native_kernel
 from .oracle import alpha_from_neighbors, reseed
 from .state_lifecycle import CheckpointedStateLifecycle
+from .sweep_runner import run_sweep_blocks
 
 STATE_SCHEMA = "doc_id long, words array<long>, zs array<long>"
 # a sweep additionally emits the tokens whose topic CHANGED (word, old
@@ -72,54 +70,13 @@ SWEEP_SCHEMA = (
 )
 
 
-def _sweep_doc_reference(
-    ws, zs, nd, nwp, np_, cand, lam, slb, beta, alpha, av, a_sum, rng
-):
-    """Per-token NumPy kernel — the arbiter both the NumPy oracle and the
-    fast kernel are held bit-identical to (EntSumModel.java:133-192
-    semantics). One rng.rand() per token, CDF over the word's candidate
-    predicates, in-place count updates. Mutates zs/nd/nwp/np_; returns the
-    changed-token lists (word, old pred, new pred) for the delta-based
-    global-count refresh."""
-    ndoc = len(ws)
-    use_m3 = av is not None
-    ch_w: list = []
-    ch_old: list = []
-    ch_new: list = []
-    for i in range(ndoc):
-        w, p_old = int(ws[i]), int(zs[i])
-        nd[p_old] -= 1
-        nwp[p_old, w] -= 1
-        np_[p_old] -= 1
-        c = cand[w]
-        a_c = av[c] if use_m3 else alpha
-        probs = (
-            (nd[c] + a_c) / (ndoc - 1 + a_sum)
-            * (nwp[c, w] + lam[c, w] * beta)
-            / (np_[c] + slb[c])
-        )
-        cdf = np.cumsum(probs)
-        u = rng.rand() * cdf[-1]
-        p_new = int(
-            c[int(np.searchsorted(cdf, u, side="right").clip(0, len(c) - 1))]
-        )
-        zs[i] = p_new
-        nd[p_new] += 1
-        nwp[p_new, w] += 1
-        np_[p_new] += 1
-        if p_new != p_old:
-            ch_w.append(w)
-            ch_old.append(p_old)
-            ch_new.append(p_new)
-    return ch_w, ch_old, ch_new
-
-
 def _sweep_doc_fast(
     ws_l, zs_l, nd, nwp_flat, np_l, W, word_cache, cand, lam, slb, beta,
     alpha, av, a_sum, rng
 ):
-    """Scalar-Python twin of _sweep_doc_reference, BIT-IDENTICAL by
-    construction (test_gibbs_kernels.py asserts it):
+    """Interpreted fallback of the compiled kernel: one doc of
+    ``GibbsOracle.sweep``'s inner loop, BIT-IDENTICAL by construction
+    (test_gibbs_fused.py holds it to the C kernel):
 
       - rng.rand(ndoc) pre-draws the token uniforms — MT19937 emits the
         same double sequence batched or one-at-a-time;
@@ -129,11 +86,12 @@ def _sweep_doc_fast(
         (0.0 + x == x exactly, probabilities are non-negative);
       - bisect_right == np.searchsorted(side="right").
 
-    Why it is faster (~5×): the reference pays ~6 NumPy dispatches on
-    len(c)-sized arrays PER TOKEN (µs each on tiny arrays); here the
-    candidate loop is plain-float arithmetic over per-word cached lists
-    (candidates, flat nwp offsets, λ·β, Σλβ — all sweep-constant), and the
-    only NumPy touched per token is two flat int64 reads/writes. Mutates
+    Why it is faster than the oracle (~5×): the oracle pays ~6 NumPy
+    dispatches on len(c)-sized arrays PER TOKEN (µs each on tiny arrays);
+    here the candidate loop is plain-float arithmetic over per-word cached
+    lists (candidates, flat nwp offsets, λ·β, Σλβ — all sweep-constant),
+    and the only NumPy touched per token is two flat int64 reads/writes.
+    Mutates
     zs_l/nd/np_l (python lists) and nwp_flat (flat int64) in place;
     returns the changed-token lists (word, old pred, new pred)."""
     ndoc = len(ws_l)
@@ -222,304 +180,83 @@ def _m3_alpha_rows(nbr_col, P: float, alpha: float, eps: float):
         yield alpha_from_neighbors(tup, P, alpha, eps)
 
 
-def _run_arrow_batches(
-    batches, lib, const, nwp, np_, P, alpha, seed, sweep_idx,
-):
-    """mapInArrow loop for the native kernel (M1/M2/M5 path): Arrow list
-    columns already hold a FLAT values buffer + offsets, which is
-    exactly the kernel's input layout — so tokens go Arrow→C with
-    zero-copy reads and no per-doc Python at all (the pandas path pays
-    O(docs) concatenate/split; at ~10-token docs that rivaled the
-    kernel itself). Output reuses the input words column unchanged and
-    wraps the kernel's flat outputs back into ListArrays by offset."""
-    import pyarrow as pa
+def _m3_alpha_matrix(nbr_col, P: int, alpha: float, eps: float):
+    """(av_mat n_docs×P, a_sums) for one batch — the per-doc α inputs of
+    ``sweep_batch_native``; ``float(av.sum())`` is the same reduction the
+    oracle uses."""
+    av_mat = np.empty((len(nbr_col), P), dtype=np.float64)
+    a_sums = np.empty(len(nbr_col), dtype=np.float64)
+    for j, av in enumerate(_m3_alpha_rows(nbr_col, P, alpha, eps)):
+        av_mat[j] = av
+        a_sums[j] = float(av.sum())
+    return av_mat, a_sums
 
+
+def _run_gibbs_blocks(
+    batches, lib, const, nwp, np_, P, alpha, beta, seed, sweep0, k,
+    eps=None,
+):
+    """One partition's M1 sweep pass (``k`` fused sweeps) through the
+    shared Arrow block runner. The partition sweeps against local AD-LDA
+    working copies of (Nwp, Np), carried across its batches and fused
+    sweeps. ``lib`` is the compiled kernel (``native_kernel.load_native()``
+    on the executor); None runs the interpreted ``_sweep_doc_fast`` —
+    bit-identical, so a cluster mixing both still produces one chain.
+    ``eps`` not None = M3: per-doc α rows rebuilt from the batch's
+    ``nbrs`` column."""
     W = nwp.shape[1]
     nwp_flat = nwp.ravel().copy()
     np_arr = np_.copy()
-    csr_indptr = const["csr_indptr"]
-    csr_data = const["csr_data"]
-    lam_beta = const["lam_beta"]
-    slb = np.ascontiguousarray(const["slb"])
     nd_scratch = np.zeros(P, dtype=np.int64)
     cdf_scratch = np.empty(max(int(const["max_cand"]), 1), dtype=np.float64)
-    for rb in batches:
-        n = rb.num_rows
-        if n == 0:
-            continue
-        doc_ids = rb.column(0).to_numpy(zero_copy_only=False)
-        words_col = rb.column(1)
-        offsets32 = words_col.offsets.to_numpy(zero_copy_only=False)
-        doc_indptr = (offsets32 - offsets32[0]).astype(np.int64)
-        ws_flat = np.ascontiguousarray(
-            words_col.flatten().to_numpy(zero_copy_only=False),
-            dtype=np.int64,
-        )
-        zs_flat = np.array(
-            rb.column(2).flatten().to_numpy(zero_copy_only=False),
-            dtype=np.int64,
-        )  # writable copy — the kernel mutates in place
-        seeds = (
-            (seed * 1_000_003 + sweep_idx * 10_007
-             + doc_ids.astype(np.int64) * 131) % (2**32 - 1)
-        ).astype(np.uint32)
-        ch_w, ch_old, ch_new, ch_counts = native_kernel.sweep_batch_native(
-            lib, doc_indptr, ws_flat, zs_flat, seeds, P, W, nwp_flat,
-            np_arr, csr_indptr, csr_data, lam_beta, slb, alpha,
-            None, None, nd_scratch, cdf_scratch,
-        )
-        ch_off = np.zeros(n + 1, dtype=np.int32)
-        np.cumsum(ch_counts, out=ch_off[1:], dtype=np.int32)
+    cand, lam, slb = const["cand"], const["lam"], const["slb"]
+    word_cache: dict = {}
+    rng = np.random.RandomState(0)
 
-        def lst(off, vals):
-            return pa.ListArray.from_arrays(pa.array(off), pa.array(vals))
-
-        yield pa.RecordBatch.from_arrays(
-            [rb.column(0), words_col,
-             lst(doc_indptr.astype(np.int32), zs_flat),
-             lst(ch_off, ch_w), lst(ch_off, ch_old), lst(ch_off, ch_new)],
-            names=["doc_id", "words", "zs", "dw", "dp_old", "dp_new"],
-        )
-
-
-def _interleave_doc_delta_cols(n_docs, per_sweep):
-    """Regroup per-sweep changed-token columns by doc.
-
-    ``per_sweep`` is a list of (cols, counts) — one entry per fused
-    sweep, ``cols`` a tuple of that sweep's flat changed-token arrays
-    (any number of parallel columns) and ``counts`` the per-doc change
-    counts. Returns (out_cols, offsets) where offsets (int64[n_docs+1])
-    delimits each doc's deltas from ALL sweeps, sweep-ordered within a
-    doc. Pure index arithmetic, O(total changes)."""
-    n_cols = len(per_sweep[0][0]) if per_sweep else 0
-    total_counts = np.zeros(n_docs, dtype=np.int64)
-    for _, cc in per_sweep:
-        total_counts += cc
-    offsets = np.zeros(n_docs + 1, dtype=np.int64)
-    np.cumsum(total_counts, out=offsets[1:])
-    total = int(offsets[-1])
-    out_cols = tuple(np.empty(total, dtype=np.int64) for _ in range(n_cols))
-    acc = np.zeros(n_docs, dtype=np.int64)
-    for cols, cc in per_sweep:
-        m = int(cc.sum())
-        if m == 0:
-            continue
-        starts = offsets[:-1] + acc
-        seg0 = np.zeros(n_docs, dtype=np.int64)
-        np.cumsum(cc[:-1], out=seg0[1:])
-        pos = np.repeat(starts - seg0, cc) + np.arange(m, dtype=np.int64)
-        for out, col in zip(out_cols, cols):
-            out[pos] = col
-        acc += cc
-    return out_cols, offsets
-
-
-def _interleave_doc_deltas(n_docs, per_sweep):
-    """M1 3-column shape of ``_interleave_doc_delta_cols``: per_sweep
-    entries are (ch_w, ch_old, ch_new, ch_counts) → (dw, dp_old,
-    dp_new, offsets)."""
-    cols, offsets = _interleave_doc_delta_cols(
-        n_docs, [((cw, co, cn), cc) for cw, co, cn, cc in per_sweep]
-    )
-    if not cols:
-        z = np.zeros(0, dtype=np.int64)
-        return z, z, z, offsets
-    return (*cols, offsets)
-
-
-def _run_fused_arrow_batches(
-    batches, lib, const, nwp, np_, P, alpha, seed, sweep0, k,
-):
-    """K sweeps fused into ONE mapInArrow pass (M1/M2/M5 native path).
-
-    Rationale: at late chain the per-sweep cost is dominated by the
-    fixed per-job term (job launch + Arrow state transfer + eager
-    checkpoint, ~0.6 s measured) rather than the kernel; fusing K
-    sweeps amortizes that term K×. Semantics: AD-LDA already lets each
-    partition sweep against counts that are stale ACROSS partitions
-    within a sweep; fusion extends the same staleness across the K
-    fused sweeps (each partition carries its own locally-updated counts
-    from sweep s to s+1 instead of receiving the cross-partition
-    refresh). Two exactness anchors remain:
-
-      - with n_partitions=1 the local counts ARE the global counts, so
-        a fused block is BIT-IDENTICAL to K unfused sweeps (test-gated
-        in test_gibbs_fused.py);
-      - every sweep's integer deltas are emitted (regrouped per doc,
-        sweep-ordered), so the driver's delta refresh reconstructs the
-        EXACT global counts at the block boundary — fusion never
-        degrades the count matrices, only the intermediate broadcast
-        freshness (gated multi-partition by the NDCG floor in
-        test_gibbs_fused.py).
-
-    Per-doc RNG streams are reseeded per (base_seed, sweep, doc)
-    exactly as the unfused path, so fusion changes WHICH counts a
-    sample sees, never the random numbers.
-
-    The partition's batches are buffered (the same data the local
-    checkpoint already holds as executor blocks, so memory is ~2× state
-    for the duration of the pass). ``lib`` None (executor without a C
-    compiler) degrades to the interpreted numba-twin kernel —
-    bit-identical per sweep, so heterogeneous clusters still agree."""
-    import pyarrow as pa
-
-    W = nwp.shape[1]
-    nwp_flat = nwp.ravel().copy()
-    np_arr = np_.copy()
-    csr_indptr = const["csr_indptr"]
-    csr_data = const["csr_data"]
-    lam_beta = const["lam_beta"]
-    slb = np.ascontiguousarray(const["slb"])
-    nd_scratch = np.zeros(P, dtype=np.int64)
-    cdf_scratch = np.empty(max(int(const["max_cand"]), 1), dtype=np.float64)
-
-    buf = []  # (rb_doc_col, words_col, doc_ids_i64, doc_indptr, ws, zs)
-    for rb in batches:
-        if rb.num_rows == 0:
-            continue
-        words_col = rb.column(1)
-        offsets32 = words_col.offsets.to_numpy(zero_copy_only=False)
-        buf.append((
-            rb.column(0),
-            words_col,
-            rb.column(0).to_numpy(zero_copy_only=False).astype(np.int64),
-            (offsets32 - offsets32[0]).astype(np.int64),
-            np.ascontiguousarray(
-                words_col.flatten().to_numpy(zero_copy_only=False),
-                dtype=np.int64,
-            ),
-            np.array(
-                rb.column(2).flatten().to_numpy(zero_copy_only=False),
-                dtype=np.int64,
-            ),
-        ))
-
-    deltas = [[] for _ in buf]  # per batch: per-sweep change tuples
-    for s in range(k):
-        sweep_idx = sweep0 + s
-        for j, (_, _, doc_ids, doc_indptr, ws_flat, zs_flat) in enumerate(buf):
-            seeds = (
-                (seed * 1_000_003 + sweep_idx * 10_007 + doc_ids * 131)
-                % (2**32 - 1)
+    def kernel(blk, seeds):
+        zs = blk.state[0]
+        av_mat = a_sums = None
+        if eps is not None:
+            av_mat, a_sums = _m3_alpha_matrix(
+                blk.rb.column("nbrs").to_pylist(), P, alpha, eps
             )
-            if lib is not None:
-                ch = native_kernel.sweep_batch_native(
-                    lib, doc_indptr, ws_flat, zs_flat,
-                    seeds.astype(np.uint32), P, W, nwp_flat, np_arr,
-                    csr_indptr, csr_data, lam_beta, slb, alpha,
-                    None, None, nd_scratch, cdf_scratch,
-                )
+        if lib is not None:
+            *ch, counts = native_kernel.sweep_batch_native(
+                lib, blk.indptr, blk.ws, zs, seeds, P, W, nwp_flat, np_arr,
+                const["csr_indptr"], const["csr_data"], const["lam_beta"],
+                slb, alpha, av_mat, a_sums, nd_scratch, cdf_scratch,
+            )
+            return tuple(ch), counts
+        np_l = np_arr.tolist()
+        ch_w, ch_old, ch_new = [], [], []
+        counts = np.zeros(len(seeds), dtype=np.int64)
+        for j in range(len(seeds)):
+            lo, hi = blk.indptr[j], blk.indptr[j + 1]
+            zs_l = zs[lo:hi].tolist()
+            nd = [0] * P
+            for p in zs_l:
+                nd[p] += 1
+            if av_mat is None:
+                av, a_sum = None, P * alpha
             else:
-                n_tok = ws_flat.size
-                n_docs = len(doc_indptr) - 1
-                cw = np.empty(n_tok, dtype=np.int64)
-                co = np.empty(n_tok, dtype=np.int64)
-                cn = np.empty(n_tok, dtype=np.int64)
-                cc = np.empty(n_docs, dtype=np.int64)
-                n_ch = numba_kernel.sweep_batch_py(
-                    doc_indptr, ws_flat, zs_flat, seeds, P, W, nwp_flat,
-                    np_arr, csr_indptr, csr_data, lam_beta, slb, alpha,
-                    False, np.zeros((0, 0), dtype=np.float64),
-                    np.zeros(0, dtype=np.float64), nd_scratch, cdf_scratch,
-                    cw, co, cn, cc,
-                )
-                ch = (cw[:n_ch], co[:n_ch], cn[:n_ch], cc)
-            deltas[j].append(ch)
-
-    def lst(off, vals):
-        return pa.ListArray.from_arrays(pa.array(off), pa.array(vals))
-
-    for (doc_col, words_col, _, doc_indptr, _, zs_flat), per_sweep in zip(
-        buf, deltas
-    ):
-        n = len(doc_indptr) - 1
-        dw, dold, dnew, ch_off = _interleave_doc_deltas(n, per_sweep)
-        yield pa.RecordBatch.from_arrays(
-            [doc_col, words_col,
-             lst(doc_indptr.astype(np.int32), zs_flat),
-             lst(ch_off.astype(np.int32), dw),
-             lst(ch_off.astype(np.int32), dold),
-             lst(ch_off.astype(np.int32), dnew)],
-            names=["doc_id", "words", "zs", "dw", "dp_old", "dp_new"],
-        )
-
-
-def _run_compiled_batches(
-    batches, kern, lib, const, nwp, np_, P, alpha, seed, sweep_idx,
-    use_m3, eps,
-):
-    """Arrow-batch loop for the compiled kernels (native C / numba): flat
-    token layout + one kernel call per batch, so per-token work never
-    re-enters the interpreter. Same AD-LDA working-copy discipline and
-    changed-token outputs as the per-doc kernels."""
-    W = nwp.shape[1]
-    nwp_flat = nwp.ravel().copy()
-    np_arr = np_.copy()
-    csr_indptr = const["csr_indptr"]
-    csr_data = const["csr_data"]
-    lam_beta = const["lam_beta"]
-    slb = np.ascontiguousarray(const["slb"])
-    nd_scratch = np.zeros(P, dtype=np.int64)
-    cdf_scratch = np.empty(max(int(const["max_cand"]), 1), dtype=np.float64)
-    for b in batches:
-        n = len(b)
-        if n == 0:
-            continue
-        ws_list = [np.ascontiguousarray(x, dtype=np.int64) for x in b["words"]]
-        lens = np.fromiter((x.size for x in ws_list), np.int64, n)
-        doc_indptr = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(lens, out=doc_indptr[1:])
-        ws_flat = np.concatenate(ws_list)
-        zs_flat = np.concatenate(
-            [np.asarray(x, dtype=np.int64) for x in b["zs"]]
-        )
-        # vectorized oracle.seed_for — identical int arithmetic in int64
-        # (values stay far below 2**63 for any int32 doc_id)
-        seeds = (
-            seed * 1_000_003 + sweep_idx * 10_007
-            + b["doc_id"].to_numpy(np.int64) * 131
-        ) % (2**32 - 1)
-        if use_m3:
-            av_mat = np.empty((n, P), dtype=np.float64)
-            a_sums = np.empty(n, dtype=np.float64)
-            for j, av in enumerate(_m3_alpha_rows(b["nbrs"], P, alpha, eps)):
-                av_mat[j] = av
-                # float(row.sum()) — same reduction the per-doc kernels use
-                a_sums[j] = float(av.sum())
-        else:
-            av_mat, a_sums = None, None
-        if kern == "native":
-            ch_w, ch_old, ch_new, ch_counts = native_kernel.sweep_batch_native(
-                lib, doc_indptr, ws_flat, zs_flat,
-                seeds.astype(np.uint32), P, W, nwp_flat, np_arr,
-                csr_indptr, csr_data, lam_beta, slb, alpha,
-                av_mat, a_sums, nd_scratch, cdf_scratch,
+                av, a_sum = av_mat[j], float(a_sums[j])
+            rng.seed(int(seeds[j]))
+            cw, co, cn = _sweep_doc_fast(
+                blk.ws[lo:hi].tolist(), zs_l, nd, nwp_flat, np_l, W,
+                word_cache, cand, lam, slb, beta, alpha, av, a_sum, rng,
             )
-        else:
-            n_tok = ws_flat.size
-            ch_w = np.empty(n_tok, dtype=np.int64)
-            ch_old = np.empty(n_tok, dtype=np.int64)
-            ch_new = np.empty(n_tok, dtype=np.int64)
-            ch_counts = np.empty(n, dtype=np.int64)
-            n_ch = numba_kernel.sweep_batch_py(
-                doc_indptr, ws_flat, zs_flat, seeds, P, W, nwp_flat,
-                np_arr, csr_indptr, csr_data, lam_beta, slb, alpha,
-                use_m3,
-                av_mat if use_m3 else np.zeros((0, 0), dtype=np.float64),
-                a_sums if use_m3 else np.zeros(0, dtype=np.float64),
-                nd_scratch, cdf_scratch, ch_w, ch_old, ch_new, ch_counts,
-            )
-            ch_w, ch_old, ch_new = ch_w[:n_ch], ch_old[:n_ch], ch_new[:n_ch]
-        ch_indptr = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(ch_counts, out=ch_indptr[1:])
-        yield pd.DataFrame({
-            "doc_id": b["doc_id"],
-            "words": b["words"],
-            "zs": np.split(zs_flat, doc_indptr[1:-1]),
-            "dw": np.split(ch_w, ch_indptr[1:-1]),
-            "dp_old": np.split(ch_old, ch_indptr[1:-1]),
-            "dp_new": np.split(ch_new, ch_indptr[1:-1]),
-        })
+            zs[lo:hi] = zs_l
+            ch_w += cw
+            ch_old += co
+            ch_new += cn
+            counts[j] = len(cw)
+        np_arr[:] = np_l
+        as_arr = (np.asarray(x, dtype=np.int64) for x in (ch_w, ch_old, ch_new))
+        return tuple(as_arr), counts
+
+    return run_sweep_blocks(
+        batches, ("zs",), ("dw", "dp_old", "dp_new"), kernel, seed, sweep0, k,
+    )
 
 
 @dataclass
@@ -543,13 +280,6 @@ class GibbsConfig:
     # checkpoints in plans/checkpoint.py as the durable resume points.
     # See models/state_lifecycle.py for the tradeoff.
     reliable_checkpoint: bool = False
-    # "native" = runtime-compiled C kernel (default; ~10× the fast
-    # kernel, falls back to "fast" where no C compiler exists);
-    # "numba" = the jitted twin (interpreted where numba is absent);
-    # "fast" = scalar-Python kernel; "reference" = the per-token NumPy
-    # kernel the oracle parity tests arbitrate against. ALL produce
-    # identical z-chains (test_gibbs_kernels.py).
-    kernel: str = "native"
     # >1 fuses that many sweeps into ONE Spark job (mapInArrow pass):
     # each partition carries its locally-updated counts across the
     # fused sweeps instead of receiving the cross-partition refresh —
@@ -559,9 +289,8 @@ class GibbsConfig:
     # fusion factor. Exact anchors: bit-identical to unfused at
     # n_partitions=1; global counts exactly reconstructed from the
     # block's deltas at every block boundary (test_gibbs_fused.py).
-    # DEFAULT 1: the bit-parity-to-reference contract holds only
-    # unfused for n_partitions>1. Applies to the native non-M3 path;
-    # other paths sweep per-job regardless.
+    # DEFAULT 1: the bit-parity-to-oracle contract holds only unfused
+    # for n_partitions>1. M3 (doc_sr) sweeps one per job regardless.
     sweeps_per_job: int = 1
 
     @property
@@ -604,25 +333,6 @@ def _collect_lam(
     return lam
 
 
-def resolve_kernel(name: str) -> str:
-    """Driver-side kernel resolution with explicit degradation. The
-    resolved name decides what the sweep-constant broadcast must carry
-    (CSR candidates + flat λ·β for the compiled kernels)."""
-    if name == "native" and not native_kernel.native_available():
-        warnings.warn(
-            "kernel='native': no C compiler available — using 'fast' "
-            "(bit-identical, slower)", stacklevel=2,
-        )
-        return "fast"
-    if name == "numba" and not numba_kernel.numba_available():
-        warnings.warn(
-            "kernel='numba': numba not installed — running the same "
-            "kernel body interpreted (bit-identical, slow); install "
-            "numba or use kernel='native'", stacklevel=2,
-        )
-    return name
-
-
 class DistributedGibbs(CheckpointedStateLifecycle):
     """Driver-side sweep loop. Usage:
 
@@ -653,20 +363,14 @@ class DistributedGibbs(CheckpointedStateLifecycle):
         self.cand = _collect_cand(obj_pred)
         self.lam = _collect_lam(lam_df, cfg.n_preds, cfg.n_words, cfg.lam_default)
         self.sum_lam_beta = self.lam.sum(axis=1) * cfg.beta
-        self.kernel = resolve_kernel(cfg.kernel)
-        if self.kernel in ("native", "numba"):
-            # sweep-constant compiled-kernel inputs, packed once:
-            # CSR candidates and λ·β ((lam*β) elementwise equals the fast
-            # kernel's per-entry float(lam[c,w])*β bit-for-bit)
-            self._csr_indptr, self._csr_data = native_kernel.cand_to_csr(
-                self.cand, cfg.n_words
-            )
-            self._lam_beta = np.ascontiguousarray(
-                (self.lam * cfg.beta).ravel()
-            )
-            self._max_cand = (
-                int(np.diff(self._csr_indptr).max()) if self.cand else 1
-            )
+        # sweep-constant compiled-kernel inputs, packed once: CSR
+        # candidates and λ·β ((lam*β) elementwise equals the interpreted
+        # kernel's per-entry float(lam[c,w])*β bit-for-bit)
+        self._csr_indptr, self._csr_data = native_kernel.cand_to_csr(
+            self.cand, cfg.n_words
+        )
+        self._lam_beta = np.ascontiguousarray((self.lam * cfg.beta).ravel())
+        self._max_cand = int(np.diff(self._csr_indptr).max()) if self.cand else 1
         self.corpus = corpus
         self.state: DataFrame | None = None
         self.nwp: np.ndarray | None = None
@@ -803,15 +507,13 @@ class DistributedGibbs(CheckpointedStateLifecycle):
     # ---- sweep-constant broadcast (candidates / λ — shipped ONCE) ----
     def _ensure_const_bc(self):
         if self._const_bc is None:
-            payload = {
+            # the compiled kernel reads the CSR + λ·β, the interpreted
+            # fallback the candidate dict + λ
+            self._const_bc = self.spark.sparkContext.broadcast({
                 "cand": self.cand, "lam": self.lam, "slb": self.sum_lam_beta,
-            }
-            if self.kernel in ("native", "numba"):
-                payload.update(
-                    csr_indptr=self._csr_indptr, csr_data=self._csr_data,
-                    lam_beta=self._lam_beta, max_cand=self._max_cand,
-                )
-            self._const_bc = self.spark.sparkContext.broadcast(payload)
+                "csr_indptr": self._csr_indptr, "csr_data": self._csr_data,
+                "lam_beta": self._lam_beta, "max_cand": self._max_cand,
+            })
         return self._const_bc
 
     def close(self) -> None:
@@ -824,137 +526,29 @@ class DistributedGibbs(CheckpointedStateLifecycle):
     # ---- one sweep (or a fused block of n_fused sweeps) ----
     def sweep(self, n_fused: int = 1) -> None:
         cfg = self.cfg
-        sweep_idx = self.sweeps_done
-        if n_fused > 1 and (self.kernel != "native" or self.doc_sr is not None):
+        use_m3 = self.doc_sr is not None
+        if n_fused > 1 and use_m3:
             raise ValueError(
-                "fused sweeps require kernel='native' and no doc_sr (M3 "
-                "re-derives neighbor payloads between sweeps)"
+                "fused sweeps require no doc_sr (M3 re-derives neighbor "
+                "payloads between sweeps)"
             )
         bc = self.spark.sparkContext.broadcast((self.nwp, self.np_))
         const_bc = self._ensure_const_bc()
         P, alpha, beta, seed = cfg.n_preds, cfg.alpha_eff, cfg.beta, cfg.base_seed
-        eps = cfg.epsilon
-        use_m3 = self.doc_sr is not None
-        kernel = self.kernel
+        eps = cfg.epsilon if use_m3 else None
+        sweep_idx = self.sweeps_done
 
-        def sweep_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def sweep_fn(batches):
             nwp, np_ = bc.value
-            const = const_bc.value
-            kern = kernel
-            lib = None
-            if kern == "native":
-                lib = native_kernel.load_native()
-                if lib is None:  # executor without a compiler: degrade
-                    kern = "fast"
-            if kern in ("native", "numba"):
-                yield from _run_compiled_batches(
-                    batches, kern, lib, const, nwp, np_, P, alpha, seed,
-                    sweep_idx, use_m3, eps,
-                )
-                return
-            cand, lam, slb = const["cand"], const["lam"], const["slb"]
-            # partition-local working copies (AD-LDA): the fast kernel keeps
-            # them as a flat int64 array + python int list, the reference
-            # kernel as the original 2-D array — same update sequence
-            if kernel == "reference":
-                nwp = nwp.copy()
-                np_ = np_.copy()
-            else:
-                W = nwp.shape[1]
-                nwp_flat = nwp.ravel().copy()
-                np_l = [int(x) for x in np_]
-                word_cache: dict = {}
-            rng0 = np.random.RandomState(0)
-            for b in batches:
-                zs_col = []
-                dw_col, dold_col, dnew_col = [], [], []
-                nbr_col = b["nbrs"] if use_m3 else [None] * len(b)
-                for d, ws, zs, nbrs in zip(
-                    b["doc_id"], b["words"], b["zs"], nbr_col
-                ):
-                    if use_m3:
-                        tup = []
-                        entries = (
-                            nbrs if isinstance(nbrs, (list, np.ndarray)) else []
-                        )
-                        for e in entries:
-                            pn = e["pn"]
-                            if pn is None or len(pn) == 0:
-                                pn = []
-                            tup.append((
-                                int(e["nbr"]),
-                                int(e["nd"]),
-                                np.asarray([x["p"] for x in pn], dtype=np.int64),
-                                np.asarray([x["n"] for x in pn], dtype=np.int64),
-                            ))
-                        av = alpha_from_neighbors(tup, P, alpha, eps)
-                        a_sum = float(av.sum())
-                    else:
-                        av, a_sum = None, P * alpha
-                    rng = reseed(rng0, seed, sweep_idx, int(d))
-                    if kernel == "reference":
-                        ws_a = np.asarray(ws, dtype=np.int64)
-                        zs_a = np.asarray(zs, dtype=np.int64).copy()
-                        nd = np.bincount(zs_a, minlength=P).astype(np.int64)
-                        ch = _sweep_doc_reference(
-                            ws_a, zs_a, nd, nwp, np_, cand, lam, slb,
-                            beta, alpha, av, a_sum, rng,
-                        )
-                        zs_col.append(zs_a)
-                    else:
-                        ws_l = np.asarray(ws, dtype=np.int64).tolist()
-                        zs_l = np.asarray(zs, dtype=np.int64).tolist()
-                        nd = [0] * P
-                        for p in zs_l:
-                            nd[p] += 1
-                        ch = _sweep_doc_fast(
-                            ws_l, zs_l, nd, nwp_flat, np_l, W, word_cache,
-                            cand, lam, slb, beta, alpha, av, a_sum, rng,
-                        )
-                        zs_col.append(np.asarray(zs_l, dtype=np.int64))
-                    dw_col.append(np.asarray(ch[0], dtype=np.int64))
-                    dold_col.append(np.asarray(ch[1], dtype=np.int64))
-                    dnew_col.append(np.asarray(ch[2], dtype=np.int64))
-                yield pd.DataFrame(
-                    {"doc_id": b["doc_id"], "words": b["words"],
-                     "zs": zs_col, "dw": dw_col, "dp_old": dold_col,
-                     "dp_new": dnew_col}
-                )
-
-        def sweep_fn_arrow(batches):
-            # Arrow-native twin of sweep_fn for the C kernel (no M3):
-            # falls back to the pandas path only if this executor cannot
-            # compile (then via the fast kernel — bit-identical)
-            lib = native_kernel.load_native()
-            if lib is None and n_fused == 1:
-                import pyarrow as pa
-
-                def as_pandas():
-                    for rb in batches:
-                        yield pa.Table.from_batches([rb]).to_pandas()
-
-                for pdf_out in sweep_fn(as_pandas()):
-                    yield pa.RecordBatch.from_pandas(pdf_out)
-                return
-            const = const_bc.value
-            nwp, np_ = bc.value
-            if n_fused > 1:
-                # the fused runner handles lib=None itself (interpreted
-                # twin — bit-identical per sweep, counts carry the same)
-                yield from _run_fused_arrow_batches(
-                    batches, lib, const, nwp, np_, P, alpha, seed,
-                    sweep_idx, n_fused,
-                )
-                return
-            yield from _run_arrow_batches(
-                batches, lib, const, nwp, np_, P, alpha, seed, sweep_idx,
+            yield from _run_gibbs_blocks(
+                batches, native_kernel.load_native(), const_bc.value, nwp,
+                np_, P, alpha, beta, seed, sweep_idx, n_fused, eps,
             )
 
-        old = self.state
         # project away a previous sweep's delta columns (their aggregation
         # already happened) so they neither ride through Arrow nor grow the
         # checkpoint
-        base = old.select("doc_id", "words", "zs")
+        base = self.state.select("doc_id", "words", "zs")
         # the payload join re-keys state to spark.sql.shuffle.partitions —
         # restore the sampler's partitioning so the AD-LDA partition count
         # (and with n_partitions=1, oracle bit-parity) is preserved
@@ -963,49 +557,21 @@ class DistributedGibbs(CheckpointedStateLifecycle):
             if use_m3
             else base
         )
-        # partitioning by doc_id is already established; mapInPandas /
-        # mapInArrow preserve it. localCheckpoint materializes the sweep
-        # AND truncates lineage — without it the plan chains one map per
-        # sweep (O(n) plan growth, and every sweep's broadcast stays
-        # referenced for task re-serialization: an unbounded leak at
-        # 1000 sweeps). The native non-M3 path goes through mapInArrow
-        # (zero-copy flat token buffers, no per-doc Python — see
-        # _run_arrow_batches).
-        if kernel == "native" and not use_m3:
-            swept = src.sortWithinPartitions("doc_id").mapInArrow(
-                sweep_fn_arrow, SWEEP_SCHEMA
-            )
-        else:
-            swept = src.sortWithinPartitions("doc_id").mapInPandas(
-                sweep_fn, SWEEP_SCHEMA
-            )
-        # lazy local checkpoint: the delta aggregation below is the action
-        # that materializes (and persists + lineage-truncates) the new
-        # state — one job per sweep instead of checkpoint-then-aggregate.
-        # The old state is released only AFTER that job: the sweep reads
-        # its blocks.
-        new_state = self._local_checkpoint(
-            swept, reliable=cfg.reliable_checkpoint, eager=False,
+        # partitioning by doc_id is already established; mapInArrow
+        # preserves it
+        self._commit_sweep(
+            src.sortWithinPartitions("doc_id").mapInArrow(sweep_fn, SWEEP_SCHEMA),
+            bc, n_fused,
         )
-        self.state = new_state
-        self.sweeps_done += n_fused
-        self._apply_count_deltas()
-        self._finalize_lazy_checkpoint()
-        self._release_old_state(old)
-        # The PREVIOUS sweep's broadcast is now unreferenced (its state was
-        # checkpointed a sweep ago and unpersisted above) — destroy it
-        # explicitly instead of waiting on ContextCleaner; the current bc is
-        # deferred one sweep out of caution.
-        self._retire_broadcast(bc)
 
     def run(self, n_sweeps: int) -> None:
         if self.state is None:
             self.init_state()
         k = max(1, int(self.cfg.sweeps_per_job))
-        if k > 1 and (self.kernel != "native" or self.doc_sr is not None):
+        if k > 1 and self.doc_sr is not None:
             warnings.warn(
-                "sweeps_per_job>1 applies only to the native non-M3 "
-                "path; sweeping one per job", stacklevel=2,
+                "sweeps_per_job>1 does not apply with doc_sr (M3); "
+                "sweeping one per job", stacklevel=2,
             )
             k = 1
         done = 0

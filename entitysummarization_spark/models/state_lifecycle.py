@@ -1,8 +1,9 @@
 """Iterative-sampler state lifecycle: checkpoint + explicit release.
 
-Shared by DistributedGibbs (M1/M2/M3/M5) and OntoPartGibbs (M6). Both
-samplers rewrite their full token state once per sweep via mapInPandas;
-without intervention that (a) chains one mapInPandas per sweep into an
+Shared by the four distributed samplers (DistributedGibbs M1/M2/M3/M5,
+DistributedOntoPart M6, DistributedEntLda2 M4, DistributedLodLda M7).
+Each rewrites its full token state once per sweep via one map pass;
+without intervention that (a) chains one map pass per sweep into an
 O(n)-deep plan, and (b) keeps every sweep's count broadcast referenced
 for task re-serialization — an unbounded leak at the reference's 500 to
 2000 production sweeps. The discipline here:
@@ -42,8 +43,9 @@ from pyspark.sql import DataFrame
 
 
 class CheckpointedStateLifecycle:
-    """Mixin; requires ``self.spark``. Call _init_state_lifecycle() in
-    __init__."""
+    """Mixin; requires ``self.spark``, ``self.cfg.reliable_checkpoint``,
+    ``self.state``, ``self.sweeps_done`` and ``self._apply_count_deltas()``.
+    Call _init_state_lifecycle() in __init__."""
 
     def _init_state_lifecycle(self) -> None:
         self._state_handles: list = []
@@ -84,6 +86,33 @@ class CheckpointedStateLifecycle:
         self._pending_release = self._state_handles
         self._state_handles = [handle] if handle is not None else []
         return out
+
+    def _commit_sweep(self, swept: DataFrame, bc, n_sweeps: int = 1) -> None:
+        """Make ``swept`` (the lazily computed output of a sweep job over
+        ``self.state``) the new state. The order is load-bearing:
+
+          1. lazy local checkpoint of the new state;
+          2. ``sweeps_done += n_sweeps``;
+          3. the delta-count aggregation — the ONE job that materializes
+             (and persists + lineage-truncates) the new state;
+          4. force lineage truncation (_finalize_lazy_checkpoint);
+          5. release the old state — only now: step 3 read its blocks;
+          6. destroy the PREVIOUS sweep's broadcast and defer ``bc`` one
+             sweep out of caution (its state was checkpointed a sweep ago
+             and unpersisted in step 5).
+
+        Without step 4 the new state's lineage could still chain earlier
+        sweeps, and step 6 then destroyed a broadcast that lineage
+        referenced (INTERNAL_ERROR_BROADCAST two sweeps later)."""
+        old = self.state
+        self.state = self._local_checkpoint(
+            swept, reliable=self.cfg.reliable_checkpoint, eager=False,
+        )
+        self.sweeps_done += n_sweeps
+        self._apply_count_deltas()
+        self._finalize_lazy_checkpoint()
+        self._release_old_state(old)
+        self._retire_broadcast(bc)
 
     def _finalize_lazy_checkpoint(self) -> None:
         """Force lineage truncation of the current (lazily-checkpointed)

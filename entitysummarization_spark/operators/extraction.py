@@ -55,11 +55,14 @@ def extract_triples_pdf(
     automaton: AhoCorasick | None,
     surface_to_name: dict[str, str] | None,
 ) -> pd.DataFrame:
-    """Pure-pandas extraction over one Arrow batch (testable without Spark)."""
+    """Pure-pandas extraction over one Arrow batch (testable without Spark).
+    Rows whose ``content`` is not a string (null) yield no triples."""
     out: list[tuple[str, str, str, str, str, str]] = []
     for repo, path, commit, content in zip(
         batch["repo"], batch["path"], batch["commit"], batch["content"]
     ):
+        if not isinstance(content, str):
+            continue
         subj = f"{repo}/{path}"
         seen: set[tuple[str, str]] = set()
 

@@ -45,9 +45,6 @@ def save_checkpoint(gibbs: DistributedGibbs, path: str) -> str:
         "beta": gibbs.cfg.beta,
         "base_seed": gibbs.cfg.base_seed,
         "n_partitions": gibbs.cfg.n_partitions,
-        # recorded for provenance; both kernels are bit-identical so a
-        # resume under either continues the same z-chain
-        "kernel": gibbs.cfg.kernel,
     }
     tmp = os.path.join(d, "_meta.json.tmp")
     with open(tmp, "w") as f:
@@ -73,21 +70,19 @@ def load_checkpoint(
     corpus,
     obj_pred,
     lam_df,
-    kernel: str | None = None,
 ) -> DistributedGibbs:
     """Rebuild a DistributedGibbs positioned at the checkpointed sweep.
 
-    ``kernel`` overrides the checkpoint's recorded kernel — every kernel
-    is bit-identical, so a chain checkpointed under one may resume under
-    another (e.g. native on the cluster, fast on a compiler-less box);
-    test_gibbs.py asserts the cross-kernel resume equality."""
+    Keys of ``meta.json`` other than the ones read here are ignored — a
+    ``"kernel"`` entry written by older versions included; which kernel an
+    executor runs is not part of the chain (test_gibbs.py resumes such a
+    checkpoint bit-identically)."""
     with open(os.path.join(ckpt_dir, "meta.json")) as f:
         meta = json.load(f)
     cfg = GibbsConfig(
         n_preds=meta["n_preds"], n_words=meta["n_words"], alpha=meta["alpha"],
         beta=meta["beta"], base_seed=meta["base_seed"],
         n_partitions=meta["n_partitions"],
-        kernel=kernel or meta.get("kernel", "fast"),
     )
     g = DistributedGibbs(spark, corpus, obj_pred, lam_df, cfg)
     state = spark.read.parquet(os.path.join(ckpt_dir, "state"))

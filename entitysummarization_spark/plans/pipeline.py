@@ -47,7 +47,6 @@ def run_pipeline(
     min_word_freq: int = 1,
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 0,
-    kernel: str = "native",
     sweeps_per_job: int = 1,
 ) -> PipelineResult:
     """``checkpoint_dir`` + ``checkpoint_every=k`` saves the sampler state
@@ -72,7 +71,7 @@ def run_pipeline(
                               summaries=empty_sum, gibbs=None)
     cfg = GibbsConfig(
         n_preds=int(n_preds), n_words=int(n_words), alpha=alpha, beta=beta,
-        base_seed=base_seed, n_partitions=n_partitions, kernel=kernel,
+        base_seed=base_seed, n_partitions=n_partitions,
         sweeps_per_job=sweeps_per_job,
     )
     gibbs = DistributedGibbs(spark, bundle.corpus, bundle.obj_pred, bundle.lam, cfg)

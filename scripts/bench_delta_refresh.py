@@ -6,7 +6,7 @@ Round-4 verdict: the claim that the delta refresh "collapses at late
 chain" was argued, not measured. This script measures it: a synthetic
 LDA-style corpus (deterministic, seeded — no external data) with real
 topical structure so the chain actually converges, swept 60 times with
-the native kernel; each sweep records
+the compiled kernel; each sweep records
 
   - the token change rate (changed tokens / total tokens),
   - the wall time of the delta refresh (_apply_count_deltas — aggregates
@@ -90,8 +90,8 @@ def main() -> None:
     g = DistributedGibbs(spark, corpus, obj_pred, None, cfg)
     g.init_state()
     n_tokens = int(g.nwp.sum())
-    print(f"[delta-bench] P={P} W={W} D={D} tokens={n_tokens} "
-          f"kernel={g.kernel}", file=sys.stderr)
+    print(f"[delta-bench] P={P} W={W} D={D} tokens={n_tokens}",
+          file=sys.stderr)
 
     table = []
     orig_deltas = DistributedGibbs._apply_count_deltas

@@ -42,10 +42,6 @@ def main() -> None:
                     help="sampler partitions (0 → defaultParallelism)")
     ap.add_argument("--checkpoint-every", type=int, default=10)
     ap.add_argument("--seed", type=int, default=7)
-    ap.add_argument("--kernel", default="native",
-                    choices=["native", "numba", "fast", "reference"],
-                    help="Gibbs sweep kernel (all bit-identical; native "
-                         "falls back to fast where no C compiler exists)")
     ap.add_argument("--sweeps-per-job", type=int, default=1,
                     help="fuse this many sweeps into one Spark job "
                          "(opt-in late-chain throughput mode; exact "
@@ -80,7 +76,7 @@ def main() -> None:
     ck_dir = os.path.join(args.output, "checkpoints")
     result = run_pipeline(
         spark, repos, vocab=vocab, n_sweeps=args.sweeps, k=args.k,
-        base_seed=args.seed, n_partitions=n_parts, kernel=args.kernel,
+        base_seed=args.seed, n_partitions=n_parts,
         sweeps_per_job=args.sweeps_per_job,
         # mid-run resume points every k sweeps (a long sweep schedule
         # restarts from the last saved sweep, not from zero)

@@ -33,6 +33,28 @@ def test_stop_imports_filtered():
     assert list(out["obj"]) == ["numpy.core"]
 
 
+def test_null_content_row_skipped():
+    """A null ``content`` row must not fail the batch: the batch yields
+    exactly the triples of its valid rows."""
+    rows = {
+        "repo": ["r", "r"],
+        "path": ["a.py", "b.py"],
+        "commit": ["c", "c"],
+        "content": ["import numpy.core\ndef build_graph():\n",
+                    "import pandas.api\n"],
+    }
+    valid = extract_triples_pdf(pd.DataFrame(rows), None, None)
+    assert len(valid) == 3
+    with_null = pd.DataFrame({
+        "repo": rows["repo"] + ["r"],
+        "path": rows["path"] + ["null.py"],
+        "commit": rows["commit"] + ["c"],
+        "content": rows["content"] + [None],
+    })
+    got = extract_triples_pdf(with_null, None, None)
+    pd.testing.assert_frame_equal(got, valid)
+
+
 def test_name_validity_filters():
     assert not _valid_name("ab")       # too short (F6)
     assert not _valid_name("123")      # numeric

@@ -1,10 +1,10 @@
 """Fused multi-sweep blocks (GibbsConfig.sweeps_per_job > 1).
 
-Fusion runs K sweeps inside ONE mapInArrow job, carrying each
-partition's locally-updated counts across the fused sweeps (the AD-LDA
-staleness extended from within-a-sweep to within-a-block). The gates
-mirror the scheme's two exactness anchors plus the rank-fidelity bar
-every approximation in this repo clears:
+Fusion runs K sweeps inside ONE mapInArrow job (models/sweep_runner.py),
+carrying each partition's locally-updated counts across the fused sweeps
+(the AD-LDA staleness extended from within-a-sweep to within-a-block).
+The gates mirror the scheme's two exactness anchors plus the
+rank-fidelity bar every approximation in this repo clears:
 
   1. n_partitions=1 → BIT-IDENTICAL to the unfused chain (local counts
      ARE the global counts, RNG is per (seed, sweep, doc));
@@ -23,9 +23,10 @@ from entitysummarization_spark.models import native_kernel
 from entitysummarization_spark.models.gibbs import (
     DistributedGibbs,
     GibbsConfig,
-    _interleave_doc_deltas,
-    _run_arrow_batches,
-    _run_fused_arrow_batches,
+    _run_gibbs_blocks,
+)
+from entitysummarization_spark.models.sweep_runner import (
+    _interleave_doc_delta_cols,
 )
 from entitysummarization_spark.operators.canonicalize import canonical_triples
 from entitysummarization_spark.operators.corpus import build_corpus
@@ -50,7 +51,7 @@ def bundle(spark, fixture_small):
 def _run(spark, b, P, W, n_partitions, sweeps, sweeps_per_job):
     cfg = GibbsConfig(
         n_preds=P, n_words=W, base_seed=11, n_partitions=n_partitions,
-        kernel="native", sweeps_per_job=sweeps_per_job,
+        sweeps_per_job=sweeps_per_job,
     )
     g = DistributedGibbs(spark, b.corpus, b.obj_pred, b.lam, cfg)
     g.run(sweeps)
@@ -62,21 +63,24 @@ def test_interleave_doc_deltas_groups_by_doc_sweep_ordered():
     per-doc segments, sweeps in order within a doc."""
     # 3 docs; sweep A changes (doc0: 10,11) (doc2: 12); sweep B changes
     # (doc0: 20) (doc1: 21,22)
-    s_a = (np.array([10, 11, 12]), np.array([0, 0, 2]),
-           np.array([1, 1, 3]), np.array([2, 0, 1]))
-    s_b = (np.array([20, 21, 22]), np.array([5, 6, 6]),
-           np.array([7, 8, 8]), np.array([1, 2, 0]))
-    dw, dold, dnew, off = _interleave_doc_deltas(3, [s_a, s_b])
+    s_a = ((np.array([10, 11, 12]), np.array([0, 0, 2]),
+            np.array([1, 1, 3])), np.array([2, 0, 1]))
+    s_b = ((np.array([20, 21, 22]), np.array([5, 6, 6]),
+            np.array([7, 8, 8])), np.array([1, 2, 0]))
+    (dw, dold, dnew), off = _interleave_doc_delta_cols(3, [s_a, s_b])
     assert off.tolist() == [0, 3, 5, 6]
     assert dw.tolist() == [10, 11, 20, 21, 22, 12]
     assert dold.tolist() == [0, 0, 5, 6, 6, 2]
     assert dnew.tolist() == [1, 1, 7, 8, 8, 3]
+    # one sweep passes through unchanged (already doc-ordered)
+    (dw1, _, _), off1 = _interleave_doc_delta_cols(3, [s_a])
+    assert off1.tolist() == [0, 2, 2, 3] and dw1.tolist() == [10, 11, 12]
 
 
 def test_interleave_doc_deltas_empty_sweeps():
     z = np.zeros(0, dtype=np.int64)
-    zero = (z, z, z, np.zeros(2, dtype=np.int64))
-    dw, dold, dnew, off = _interleave_doc_deltas(2, [zero, zero])
+    zero = ((z, z, z), np.zeros(2, dtype=np.int64))
+    (dw, dold, dnew), off = _interleave_doc_delta_cols(2, [zero, zero])
     assert off.tolist() == [0, 0, 0] and dw.size == 0
 
 
@@ -123,10 +127,16 @@ def test_fused_remainder_and_sweep_count(spark, bundle):
 
 
 def test_fused_rejects_non_native_and_m3(spark, bundle):
+    """M3 (doc_sr) re-derives its neighbor payload between sweeps, so it
+    cannot fuse: sweep(n_fused>1) raises, run() sweeps one per job."""
+    from entitysummarization_spark.fixtures.samplers import ring_edges
+
     b, P, W = bundle
+    docs = [r["doc_id"] for r in b.corpus.select("doc_id").distinct().collect()]
+    sr = spark.createDataFrame(ring_edges(docs), "doc_a long, doc_b long")
     cfg = GibbsConfig(n_preds=P, n_words=W, base_seed=11, n_partitions=1,
-                      kernel="fast", sweeps_per_job=4)
-    g = DistributedGibbs(spark, b.corpus, b.obj_pred, b.lam, cfg)
+                      sweeps_per_job=4)
+    g = DistributedGibbs(spark, b.corpus, b.obj_pred, b.lam, cfg, doc_sr=sr)
     g.init_state()
     with pytest.raises(ValueError, match="fused"):
         g.sweep(n_fused=2)
@@ -137,9 +147,10 @@ def test_fused_rejects_non_native_and_m3(spark, bundle):
     g.close()
 
 
-def _tiny_problem():
-    """Driver-side micro problem exercising the fused runner directly:
-    2 docs, W=4 words, P=3 preds, full candidate sets."""
+def _tiny_problem(with_nbrs=False):
+    """Driver-side micro problem exercising the block runner directly:
+    2 docs, W=4 words, P=3 preds, full candidate sets. ``with_nbrs``
+    adds an M3 ``nbrs`` column (doc 0 has one neighbor, doc 1 none)."""
     import pyarrow as pa
 
     P, W = 3, 4
@@ -155,40 +166,52 @@ def _tiny_problem():
     }
     words = [[0, 1, 1, 2, 3, 0], [2, 2, 3, 0]]
     zs = [[0, 1, 2, 0, 1, 2], [1, 1, 0, 2]]
-    rb = pa.RecordBatch.from_arrays(
-        [pa.array([0, 1], type=pa.int64()),
-         pa.array(words, type=pa.list_(pa.int64())),
-         pa.array(zs, type=pa.list_(pa.int64()))],
-        names=["doc_id", "words", "zs"],
-    )
+    cols = [pa.array([0, 1], type=pa.int64()),
+            pa.array(words, type=pa.list_(pa.int64())),
+            pa.array(zs, type=pa.list_(pa.int64()))]
+    names = ["doc_id", "words", "zs"]
+    if with_nbrs:
+        pn_t = pa.list_(pa.struct([("p", pa.int64()), ("n", pa.int64())]))
+        nbr_t = pa.list_(pa.struct(
+            [("nbr", pa.int64()), ("nd", pa.int32()), ("pn", pn_t)]
+        ))
+        cols.append(pa.array(
+            [[{"nbr": 1, "nd": 4,
+               "pn": [{"p": 0, "n": 1}, {"p": 1, "n": 2}, {"p": 2, "n": 1}]}],
+             None],
+            type=nbr_t,
+        ))
+        names.append("nbrs")
+    rb = pa.RecordBatch.from_arrays(cols, names=names)
     nwp = np.zeros((P, W), dtype=np.int64)
     for ws, zz in zip(words, zs):
         for w, z in zip(ws, zz):
             nwp[z, w] += 1
-    return rb, const, nwp, P, W
+    return rb, const, nwp, P, W, beta
+
+
+def _blocks(rb, lib, const, nwp, P, beta, sweep0, k, eps=None):
+    return list(_run_gibbs_blocks(
+        iter([rb]), lib, const, nwp.copy(), nwp.sum(axis=1),
+        P, 50.0 / P, beta, 11, sweep0, k, eps,
+    ))
 
 
 @needs_cc
 def test_fused_runner_matches_sequential_unfused():
-    """Function-level parity: one partition's fused K=3 pass equals 3
-    sequential _run_arrow_batches calls with the driver's delta refresh
-    applied between them (exactly what DistributedGibbs does unfused)."""
-    rb, const, nwp0, P, W = _tiny_problem()
-    lib = native_kernel.load_native()
-    alpha, seed = 50.0 / P, 11
+    """Function-level parity: one partition's fused k=3 pass equals 3
+    sequential k=1 passes with the driver's delta refresh applied between
+    them (exactly what DistributedGibbs does unfused)."""
+    import pyarrow as pa
 
-    fused = list(_run_fused_arrow_batches(
-        iter([rb]), lib, const, nwp0.copy(), nwp0.sum(axis=1),
-        P, alpha, seed, 0, 3,
-    ))
+    rb, const, nwp0, P, W, beta = _tiny_problem()
+    lib = native_kernel.load_native()
+    fused = _blocks(rb, lib, const, nwp0, P, beta, 0, 3)
     assert len(fused) == 1
 
     cur, nwp = rb, nwp0.copy()
     for s in range(3):
-        out = list(_run_arrow_batches(
-            iter([cur]), lib, const, nwp, nwp.sum(axis=1),
-            P, alpha, seed, s,
-        ))[0]
+        out = _blocks(cur, lib, const, nwp, P, beta, s, 1)[0]
         # driver-side exact delta refresh between unfused sweeps
         for row_dw, row_po, row_pn in zip(
             out.column("dw").to_pylist(),
@@ -198,8 +221,6 @@ def test_fused_runner_matches_sequential_unfused():
             for w, po, pn in zip(row_dw, row_po, row_pn):
                 nwp[po, w] -= 1
                 nwp[pn, w] += 1
-        import pyarrow as pa
-
         cur = pa.RecordBatch.from_arrays(
             [out.column("doc_id"), out.column("words"), out.column("zs")],
             names=["doc_id", "words", "zs"],
@@ -245,20 +266,15 @@ def test_fused_multi_partition_summary_ndcg(spark):
 @needs_cc
 def test_fused_interpreted_fallback_matches_native():
     """lib=None (executor without a compiler) runs the interpreted
-    numba-twin kernel inside the SAME fused runner — identical chain, so
-    heterogeneous clusters agree even mid-block."""
-    rb, const, nwp0, P, W = _tiny_problem()
+    ``_sweep_doc_fast`` inside the SAME block runner — identical chain
+    and deltas, one sweep per job or fused, with scalar or M3 per-doc α,
+    so heterogeneous clusters agree even mid-block."""
     lib = native_kernel.load_native()
-    alpha, seed = 50.0 / P, 11
-    a = list(_run_fused_arrow_batches(
-        iter([rb]), lib, const, nwp0.copy(), nwp0.sum(axis=1),
-        P, alpha, seed, 0, 3,
-    ))[0]
-    b = list(_run_fused_arrow_batches(
-        iter([rb]), None, const, nwp0.copy(), nwp0.sum(axis=1),
-        P, alpha, seed, 0, 3,
-    ))[0]
-    assert a.column("zs").to_pylist() == b.column("zs").to_pylist()
-    assert a.column("dw").to_pylist() == b.column("dw").to_pylist()
-    assert a.column("dp_old").to_pylist() == b.column("dp_old").to_pylist()
-    assert a.column("dp_new").to_pylist() == b.column("dp_new").to_pylist()
+    for k, m3 in ((1, False), (3, False), (1, True)):
+        rb, const, nwp0, P, W, beta = _tiny_problem(with_nbrs=m3)
+        eps = 0.9 if m3 else None
+        a = _blocks(rb, lib, const, nwp0, P, beta, 0, k, eps)[0]
+        b = _blocks(rb, None, const, nwp0, P, beta, 0, k, eps)[0]
+        for col in ("zs", "dw", "dp_old", "dp_new"):
+            got, want = b.column(col).to_pylist(), a.column(col).to_pylist()
+            assert got == want, (k, m3, col)

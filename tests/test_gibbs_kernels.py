@@ -1,16 +1,18 @@
-"""Kernel bit-parity vs the reference kernel (fast / native C / numba),
-and the long-run soak: bounded plan size + bounded persisted blocks
-across 100+ sweeps (the localCheckpoint / broadcast-destroy discipline
-in gibbs.sweep)."""
+"""Distributed-chain bit-parity vs the NumPy oracle at 1 and 3
+partitions, and the long-run soak: bounded plan size + bounded persisted
+blocks across 100+ sweeps (the localCheckpoint / broadcast-destroy
+discipline in state_lifecycle._commit_sweep)."""
 
 import numpy as np
 import pytest
 
-from entitysummarization_spark.models import native_kernel, numba_kernel
 from entitysummarization_spark.models.gibbs import DistributedGibbs, GibbsConfig
+from entitysummarization_spark.models.oracle import GibbsOracle
 from entitysummarization_spark.operators.canonicalize import canonical_triples
 from entitysummarization_spark.operators.corpus import build_corpus
 from entitysummarization_spark.operators.extraction import extract_triples
+
+from test_gibbs import _oracle_inputs
 
 
 @pytest.fixture(scope="module")
@@ -24,45 +26,34 @@ def bundle(spark, fixture_small):
     return b, int(P), int(W)
 
 
-def _run(spark, b, P, W, kernel, n_partitions, sweeps=3):
+def _run(spark, b, P, W, n_partitions, sweeps=3):
     cfg = GibbsConfig(
         n_preds=P, n_words=W, base_seed=11, n_partitions=n_partitions,
-        kernel=kernel,
     )
     g = DistributedGibbs(spark, b.corpus, b.obj_pred, b.lam, cfg)
     g.run(sweeps)
     return g
 
 
-@pytest.mark.filterwarnings("ignore:kernel='numba'")  # expected degrade
 @pytest.mark.parametrize("n_partitions", [1, 3])
-@pytest.mark.parametrize("kernel", ["fast", "native", "numba"])
-def test_kernels_bit_identical(spark, bundle, kernel, n_partitions):
-    """Every kernel must reproduce the reference NumPy kernel's z-chain
-    EXACTLY (same partitioning, same seeds) — this is what keeps every
-    golden oracle valid while a compiled path is the default. "native"
-    skips only where no C compiler exists; "numba" runs the SAME kernel
-    body interpreted when numba is absent (models/numba_kernel.py), so
-    its logic is exercised here either way."""
-    if kernel == "native" and not native_kernel.native_available():
-        pytest.skip("no C compiler on this machine")
+def test_chain_matches_gibbs_oracle(spark, bundle, n_partitions):
+    """The distributed chain must reproduce ``GibbsOracle``'s z-chain and
+    Nwp EXACTLY — at 3 partitions the oracle simulates the same AD-LDA
+    partitioning (murmur3 doc_id hash, per-partition stale counts). This
+    is what keeps every golden oracle valid while the compiled kernel
+    runs the sweeps."""
     b, P, W = bundle
-    gf = _run(spark, b, P, W, kernel, n_partitions)
-    gr = _run(spark, b, P, W, "reference", n_partitions)
-    zf, zr = gf.z_state(), gr.z_state()
-    assert set(zf) == set(zr)
-    for d in zr:
-        assert np.array_equal(zf[d], zr[d]), f"doc {d}"
-    assert np.array_equal(gf.nwp, gr.nwp)
-    gf.close()
-    gr.close()
-
-
-def test_numba_kernel_importable_and_flagged():
-    """The numba twin is import-safe without numba and reports its
-    availability honestly (resolve_kernel warns + runs interpreted)."""
-    assert callable(numba_kernel.sweep_batch_py)
-    assert numba_kernel.numba_available() in (True, False)
+    corpus, cand, lam = _oracle_inputs(b, P, W)
+    orc = GibbsOracle(corpus, cand, P, W, lam=lam, base_seed=11,
+                      n_partitions=n_partitions)
+    orc.run(3)
+    g = _run(spark, b, P, W, n_partitions)
+    zs = g.z_state()
+    assert set(zs) == set(orc.state.doc_ids)
+    for d in orc.state.doc_ids:
+        assert np.array_equal(zs[d], orc.state.z[d]), f"doc {d}"
+    assert np.array_equal(g.nwp, orc.state.nwp)
+    g.close()
 
 
 def test_reliable_checkpoint_same_chain(spark, bundle, tmp_path):
@@ -83,7 +74,7 @@ def test_reliable_checkpoint_same_chain(spark, bundle, tmp_path):
         assert (
             sc._jsc.getPersistentRDDs().size() <= blocks_after_4 + 1
         )
-        g2 = _run(spark, b, P, W, "native", 2, sweeps=7)
+        g2 = _run(spark, b, P, W, 2, sweeps=7)
         z1, z2 = g.z_state(), g2.z_state()
         assert set(z1) == set(z2)
         for d in z1:

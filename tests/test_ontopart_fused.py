@@ -7,8 +7,8 @@ anchors as the M1 fusion in test_gibbs_fused.py:
   2. any partitioning → the delta-maintained global count matrices equal
      a full recompute from the final (ts, cs) state at every block
      boundary, and conserve the token total;
-  3. a compiler-less executor runs the interpreted per-token twin inside
-     the same fused runner — identical chain mid-block.
+  3. a compiler-less executor runs the interpreted per-token fallback
+     inside the same block runner — identical chain mid-block.
 """
 
 import numpy as np
@@ -25,8 +25,7 @@ from entitysummarization_spark.models import native_kernel
 from entitysummarization_spark.models.ontopart import (
     DistributedOntoPart,
     OntoPartConfig,
-    _onto_arrow_batches,
-    _onto_fused_arrow_batches,
+    _run_onto_blocks,
 )
 
 needs_cc = pytest.mark.skipif(
@@ -49,7 +48,7 @@ def _run(spark, m6_inputs, n_partitions, sweeps, sweeps_per_job):
     corpus_df, class_word = m6_inputs
     cfg = OntoPartConfig(
         n_topics=T, n_classes=C, n_words=W, n_partitions=n_partitions,
-        kernel="native", sweeps_per_job=sweeps_per_job,
+        sweeps_per_job=sweeps_per_job,
     )
     m = DistributedOntoPart(spark, corpus_df, class_word, cfg)
     m.run(sweeps)
@@ -90,20 +89,6 @@ def test_fused_remainder_and_sweep_count(spark, m6_inputs):
     m.close()
 
 
-def test_fused_rejects_python_kernel(spark, m6_inputs):
-    corpus_df, class_word = m6_inputs
-    cfg = OntoPartConfig(n_topics=T, n_classes=C, n_words=W,
-                         n_partitions=1, kernel="python", sweeps_per_job=3)
-    m = DistributedOntoPart(spark, corpus_df, class_word, cfg)
-    m.init_state()
-    with pytest.raises(ValueError, match="fused"):
-        m.sweep(n_fused=2)
-    with pytest.warns(UserWarning, match="sweeps_per_job"):
-        m.run(2)
-    assert m.sweeps_done == 2
-    m.close()
-
-
 def _tiny_problem():
     """Driver-side micro problem for the fused runner: 2 docs, W=4
     words, T=2 topics, C=3 classes, full candidate sets."""
@@ -133,8 +118,8 @@ def _tiny_problem():
 
 @needs_cc
 def test_fused_runner_matches_sequential_unfused():
-    """One partition's fused K=3 pass equals 3 sequential unfused arrow
-    passes with the driver's exact delta refresh applied between them."""
+    """One partition's fused k=3 pass equals 3 sequential k=1 passes
+    with the driver's exact delta refresh applied between them."""
     import pyarrow as pa
 
     rb, csr, nct0, nwc0, t_, c_, w_ = _tiny_problem()
@@ -142,7 +127,7 @@ def test_fused_runner_matches_sequential_unfused():
     a, b, z0, seed = 50.0 / t_, 0.01, 0.01, 11
     max_cls = c_
 
-    fused = list(_onto_fused_arrow_batches(
+    fused = list(_run_onto_blocks(
         iter([rb]), lib, csr, nct0.copy(), nwc0.copy(), t_, c_, w_,
         a, b, z0, seed, 0, 3, max_cls,
     ))
@@ -150,9 +135,9 @@ def test_fused_runner_matches_sequential_unfused():
 
     cur, nct, nwc = rb, nct0.copy(), nwc0.copy()
     for s in range(3):
-        out = list(_onto_arrow_batches(
+        out = list(_run_onto_blocks(
             iter([cur]), lib, csr, nct, nwc, t_, c_, w_,
-            a, b, z0, seed, s, max_cls,
+            a, b, z0, seed, s, 1, max_cls,
         ))[0]
         for row in zip(*(out.column(k).to_pylist()
                          for k in ("dw", "dto", "dco", "dtn", "dcn"))):
@@ -184,15 +169,18 @@ def test_fused_runner_matches_sequential_unfused():
 
 @needs_cc
 def test_fused_interpreted_fallback_matches_native():
-    """lib=None runs the interpreted per-token twin inside the SAME
-    fused runner — identical chain, deltas and state."""
+    """lib=None runs the interpreted ``_onto_fused_sweep_py`` inside the
+    SAME block runner — identical chain, deltas and state, one sweep per
+    job or fused."""
     rb, csr, nct0, nwc0, t_, c_, w_ = _tiny_problem()
     lib = native_kernel.load_native()
     a, b, z0, seed = 50.0 / t_, 0.01, 0.01, 11
-    run = lambda L: list(_onto_fused_arrow_batches(  # noqa: E731
-        iter([rb]), L, csr, nct0.copy(), nwc0.copy(), t_, c_, w_,
-        a, b, z0, seed, 0, 3, c_,
-    ))[0]
-    x, y = run(lib), run(None)
-    for col in ("ts", "cs", "dw", "dto", "dco", "dtn", "dcn"):
-        assert x.column(col).to_pylist() == y.column(col).to_pylist(), col
+    for k in (1, 3):
+        run = lambda L: list(_run_onto_blocks(  # noqa: E731
+            iter([rb]), L, csr, nct0.copy(), nwc0.copy(), t_, c_, w_,
+            a, b, z0, seed, 0, k, c_,
+        ))[0]
+        x, y = run(lib), run(None)
+        for col in ("ts", "cs", "dw", "dto", "dco", "dtn", "dcn"):
+            assert x.column(col).to_pylist() == y.column(col).to_pylist(), (
+                k, col)

@@ -56,17 +56,15 @@ def _oracle():
     return OntoPartOracle(corpus, cand, cfg)
 
 
-@pytest.mark.parametrize("kernel", ["native", "python"])
-def test_m6_one_partition_bit_parity(spark, m6_inputs, kernel):
-    """Both the runtime-compiled C grid kernel (default; falls back to
-    python where no compiler exists) and the per-token NumPy kernel must
-    be bit-identical to the sequential oracle."""
+def test_m6_one_partition_bit_parity(spark, m6_inputs):
+    """The distributed M6 chain must be bit-identical to the sequential
+    oracle (the interpreted fallback is held to the compiled grid kernel
+    in test_ontopart_fused.py)."""
     corpus_df, class_word = m6_inputs
     oracle = _oracle()
     oracle.run(SWEEPS)
 
-    cfg = OntoPartConfig(n_topics=T, n_classes=C, n_words=W,
-                         n_partitions=1, kernel=kernel)
+    cfg = OntoPartConfig(n_topics=T, n_classes=C, n_words=W, n_partitions=1)
     dist = DistributedOntoPart(spark, corpus_df, class_word, cfg)
     dist.run(SWEEPS)
 
